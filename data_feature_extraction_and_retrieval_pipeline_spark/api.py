@@ -386,8 +386,8 @@ class Engine:
 
     def hot(self, rebuild: bool | str = False, path: str | None = None):
         """The driver-resident :class:`~.serving.HotSearchIndex` built
-        from this engine's tables (cached). One bounded Spark collect
-        per table — the hot tier's index-build step.
+        from this engine's tables (cached). One Arrow collect per
+        table — the hot tier's index-build step.
 
         ``rebuild``: ``True`` forces a rebuild from the current tables;
         ``"auto"`` rebuilds only when :meth:`hot_stale` says the cached
@@ -914,15 +914,18 @@ class CurationPipeline:
         # already materialized, so nothing re-reads src through that
         # path. If the checkpoint were ever made lazy, later
         # executions would recompute the whole upstream chain once
-        # per remaining consumer with no cache. Assert the coupling
-        # instead of relying on statement order alone.
-        _root = (
-            pairs._jdf.queryExecution().analyzed().getClass().getSimpleName()
-        )
-        assert _root == "LogicalRDD", (
-            "dedup_near: src may only be unpersisted after the pair "
-            f"frame is eagerly checkpointed (got plan root {_root})"
-        )
+        # per remaining consumer with no cache. Check the coupling
+        # instead of relying on statement order alone — explicitly, so
+        # ``python -O`` keeps it; Spark Connect frames expose no JVM
+        # plan handle, and there the check is skipped.
+        jdf = getattr(pairs, "_jdf", None)
+        if jdf is not None:
+            root = jdf.queryExecution().analyzed().getClass().getSimpleName()
+            if root != "LogicalRDD":
+                raise RuntimeError(
+                    "dedup_near: src may only be unpersisted after the "
+                    f"pair frame is eagerly checkpointed (got plan root {root})"
+                )
         caching.unpersist(src)
         lab = label_propagation_canonical(pairs, rounds=3)
         drops = lab.filter(F.col("node") != F.col("canonical")).select(

@@ -410,14 +410,11 @@ _TOUCHED: dict[str, int] = {
     "report_dataset": 13,  # r13: repartition-persist (full-parallelism agg)
     "report_segment_stats": 6,
     "ann_pq": 6,
-    "dedup_minhash_lsh": 6,
-    "dedup_simhash": 6,
     "ml_stub_text_embeddings": 6,
     "ml_segment_pipeline": 6,
     "ml_ingest_pipeline": 6,
     "agg_sketch_profile": 6,
     "ml_segment_portable": 6,
-    "api_pipeline_curate": 6,
     "etl_compact_roundtrip": 6,
     "etl_csv_roundtrip": 6,
     "etl_partitioned_roundtrip": 6,
@@ -428,7 +425,6 @@ _TOUCHED: dict[str, int] = {
     "api_engine_segment": 6,
     "api_engine_hybrid": 6,
     "api_engine_tags": 6,
-    "dedup_minhash_incremental": 6,
     "ann_ivf_filtered": 6,
     "etl_orc_roundtrip": 6,
     "etl_sorted_export": 6,
@@ -470,15 +466,7 @@ _TOUCHED: dict[str, int] = {
     # round 10: new — perceptual image near-dup (dHash bands + banded
     # Hamming blocking over the integer-pure decode stub) and the
     # EventsAnalytics facade twins (the funnel one drives salted=True)
-    "dedup_image_phash": 10,
-    "api_events_funnel": 10,
     "api_events_retention": 10,
-    # round 10: alpha_ratio recounted via regexp_count (same integer,
-    # ~6x cheaper scan) — plan change for its Catalyst-form users
-    "dedup_keep_best_per_source": 10,
-    "text_quality_classifier": 10,
-    "api_pipeline_curate": 10,
-    "dedup_cosine_incremental": 9,
     "dedup_embedding_cosine": 9,
     "events_retention": 10,
     "ann_recenter_compact": 9,
@@ -509,8 +497,6 @@ _TOUCHED: dict[str, int] = {
     "events_sessionize_stream": 6,
     "dedup_minhash_stream": 6,
     "events_interval_join_stream": 6,
-    # round 5: the NULL-identity oracle fix and stream sink names
-    "text_quality_classifier": 5,
     # rounds ≤4: last semantic change per the per-round head notes
     # (keepers refreshed later without code changes keep older floors)
     "etl_row_range_select": 2,
@@ -540,20 +526,14 @@ _TOUCHED: dict[str, int] = {
     "ann_ivf": 3,
     "ann_lsh": 3,
     "ann_range_search": 3,
-    "dedup_exact": 3,
-    "dedup_minhash_lsh_portable": 3,
-    "dedup_simhash_portable": 3,
-    "dedup_keep_best_per_source": 3,
     "text_redact_pii": 3,
     # r10 late: tokenize-once shingle/feature branches (plan change)
-    "text_contamination": 12,  # r12: resident eval-fingerprint index feeds the broadcast
     "text_gopher_rules": 12,  # r12: map-only sorted-run bigram mode
     "text_chunk_windows": 3,
     # r10 late: one-explode tf-level rebuild, tf-weighted mean (new
     # oracle formulation, same values)
     "text_unigram_logprob": 12,  # r12: single-broadcast vocab (windowed total)
     "text_pack_bins": 3,
-    "etl_hash_split": 3,
     "etl_mixture_sample": 3,
     "etl_html_scrub": 3,
     "events_hopping_window": 3,
@@ -580,8 +560,6 @@ _TOUCHED: dict[str, int] = {
     "ann_pq_portable": 4,
     "ann_ivfpq_portable": 4,
     "ann_brute_force": 4,
-    "dedup_ngram_jaccard": 12,  # r12: posting-list pair mining, one corpus shuffle
-    "dedup_cluster_canonical": 12,  # r12: consumes the posting-list jaccard pairs
     "text_quality": 4,
     "text_lang_id": 4,
     "text_token_count": 4,
@@ -594,9 +572,6 @@ _TOUCHED: dict[str, int] = {
     "agg_keyword_scan": 4,
     "events_tumbling_window": 4,
     "dedup_chunks": 4,
-    # r10 late: corpus side probes the write-time fingerprint index;
-    # batch keys persisted across the probe/anti pair (plan change)
-    "dedup_incremental": 10,
     "events_interval_join": 4,
     # -- round 14 (optimization round 2): plan changes, values
     # identical; every entry re-certified by the r14 driver head.

@@ -12,14 +12,15 @@ trade for 100 TB scans and exactly the wrong one for a 10-result
 lookup a user is waiting on.
 
 :class:`HotSearchIndex` is the ES-parity piece: Spark BUILDS the
-artifact (one bounded collect per serving table — the same "index
-build" step the reference runs when it bulk-loads ES), and request
-scoring runs against the resident copy in microseconds. The score
-algebra is the operator layer's, replicated term-for-term (whole
-calibration +1.0, the hybrid 0..2/−1..1 asymmetry with missing→0,
-rounded-score ordering with id tiebreaks) and pinned by equivalence
-tests against the Spark plans (tests/test_serving.py) — the DataFrame
-path stays the system of record; the hot tier is a view of it.
+artifact (one Arrow collect per serving table, read straight into
+numpy — the same "index build" step the reference runs when it
+bulk-loads ES), and request scoring runs against the resident copy
+in microseconds. The score algebra is the operator layer's,
+replicated term-for-term (whole calibration +1.0, the hybrid
+0..2/−1..1 asymmetry with missing→0, rounded-score ordering with id
+tiebreaks) and pinned by equivalence tests against the Spark plans
+(tests/test_serving.py) — the DataFrame path stays the system of
+record; the hot tier is a view of it.
 
 Scale posture (the 100 TB story):
 
@@ -97,11 +98,56 @@ def _topk_order(scores: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     return order[: int(k)]
 
 
+def _ids(col) -> np.ndarray:
+    """An Arrow id column with the dtype ``np.asarray`` gives its
+    Python values: int64 for integer ids, ``<U`` for strings — the
+    scorers hand ids out through ``.item()``."""
+    import pyarrow as pa
+
+    if pa.types.is_integer(col.type) and not col.null_count:
+        return np.array(col.to_numpy(), dtype=np.int64)
+    return np.asarray(col.to_pylist())
+
+
+def _matrix(col, name: str) -> np.ndarray:
+    """The ``(n, dim)`` float64 matrix of an Arrow list column named
+    ``table.column``. Arrow would read a null as NaN, so null vectors,
+    null elements and ragged rows are refused here; an empty table
+    gives a ``(0, 0)`` matrix."""
+    vecs = col.combine_chunks()
+    flat = vecs.flatten()
+    if vecs.null_count:
+        raise ValueError(f"hot build: {name} holds a null vector")
+    if flat.null_count:
+        raise ValueError(f"hot build: {name} holds a null vector element")
+    if not len(vecs):
+        return np.zeros((0, 0), dtype=np.float64)
+    widths = np.diff(vecs.offsets.to_numpy())
+    if (widths != widths[0]).any():
+        raise ValueError(
+            f"hot build: {name} holds vectors of unequal width "
+            f"({widths.min()} to {widths.max()})"
+        )
+    return flat.to_numpy().astype(np.float64).reshape(len(vecs), widths[0])
+
+
+def _tag_rows(ids, lens, names, confs) -> list[tuple]:
+    """``(image_id, [(tag, confidence), …])`` rows from the flat tag
+    layout: one id and one pair count per row, then every row's names
+    and confidences back to back."""
+    pairs = list(zip(names.tolist(), confs.astype(np.float64).tolist()))
+    ends = np.cumsum(lens).tolist()
+    return [
+        (i, pairs[e - n : e])
+        for i, n, e in zip(ids.tolist(), lens.tolist(), ends)
+    ]
+
+
 class HotSearchIndex:
     """Driver-resident serving artifact for the four search modes.
 
-    Built by :meth:`from_engine` (one bounded Spark collect per
-    table); scores with numpy against the resident copies. Output rows
+    Built by :meth:`from_engine` (one Arrow collect per table);
+    scores with numpy against the resident copies. Output rows
     carry the SAME column names and ordering as the operator layer's
     DataFrames, so the service can swap tiers without touching its
     response envelope.
@@ -140,42 +186,38 @@ class HotSearchIndex:
     @classmethod
     def from_engine(cls, engine) -> "HotSearchIndex":
         """Collect the serving artifact from an Engine's tables — the
-        hot tier's "index build". Bounded by the serving columns only
-        (P1 pruning: the collect projects ids + vectors, nothing
-        else)."""
-        img_ids = img_mat = None
-        if engine.images is not None:
-            rows = engine.images.select(
-                engine.image_col, "embedding"
-            ).collect()
-            img_ids = np.asarray([r[0] for r in rows])
-            img_mat = (
-                np.asarray([r[1] for r in rows], dtype=np.float64)
-                if rows
-                else np.zeros((0, 0), dtype=np.float64)
-            )
-        seg_ids = seg_mat = None
-        if engine.segments is not None:
-            rows = engine.segments.select(
-                engine.image_col, "clip_features"
-            ).collect()
-            seg_ids = np.asarray([r[0] for r in rows])
-            seg_mat = (
-                np.asarray([r[1] for r in rows], dtype=np.float64)
-                if rows
-                else np.zeros((0, 0), dtype=np.float64)
-            )
+        hot tier's "index build". Each table is projected to its
+        serving columns (ids + vectors, or ids + tag structs) and
+        collected as Arrow batches; the matrices are read from the
+        list columns' flat values, with no Python object per element."""
+        col = engine.image_col
+
+        def fetch(df, value):
+            return df.select(col, value).toArrow().columns
+
+        def vectors(df, table, value):
+            if df is None:
+                return None, None
+            ids, vecs = fetch(df, value)
+            return _ids(ids), _matrix(vecs, f"{table}.{value}")
+
+        img_ids, img_mat = vectors(engine.images, "images", "embedding")
+        seg_ids, seg_mat = vectors(
+            engine.segments, "segments", "clip_features"
+        )
         tag_rows = None
         if engine.segment_tags is not None:
-            tag_rows = [
-                (
-                    r[0],
-                    [(t["tag"], float(t["confidence"])) for t in (r[1] or [])],
-                )
-                for r in engine.segment_tags.select(
-                    engine.image_col, "tags"
-                ).collect()
-            ]
+            ids, tags = fetch(engine.segment_tags, "tags")
+            tags = tags.combine_chunks()
+            pairs = tags.flatten()  # a null tag list holds no pairs
+            tag_rows = _tag_rows(
+                _ids(ids),
+                tags.value_lengths().fill_null(0).to_numpy(),
+                *(
+                    pairs.field(f).to_numpy(zero_copy_only=False)
+                    for f in ("tag", "confidence")
+                ),
+            )
         return cls(
             img_ids, img_mat, seg_ids, seg_mat, tag_rows,
             image_col=engine.image_col,
@@ -202,14 +244,10 @@ class HotSearchIndex:
         to ~20M×64d — which matches the SOURCE precision: CLIP emits
         512-d float32 (extract_clip_features.py), so the float64 tier
         carries no extra information to begin with. A loaded float32
-        shard scores in float32 (queries are cast to the matrix dtype
-        — no hidden float64 temp copy of the matrix at matmul time);
-        scores differ from the float64 tier by ≤ ~1e-7 relative
-        quantization, absorbed by the engine's 1e-6 rounded-score
-        ordering except for exact ties at the rounding boundary
-        (equivalence pinned at 1e-6 in tests/test_serving.py)."""
-        import numpy as np
-
+        shard scores in float32; scores differ from the float64 tier
+        by ≤ ~1e-7 relative quantization, absorbed by the engine's 1e-6
+        rounded-score ordering except for exact ties at the rounding
+        boundary (equivalence pinned at 1e-6 in tests/test_serving.py)."""
         cast = (lambda m: m.astype(np.dtype(dtype))) if dtype else (lambda m: m)
         data: dict = {"image_col": np.asarray(self.image_col)}
         if self.image_mat is not None:
@@ -219,19 +257,17 @@ class HotSearchIndex:
             data["seg_image_ids"] = self.seg_image_ids
             data["seg_mat"] = cast(self.seg_mat)
         if self.tag_rows is not None:
-            data["tag_row_ids"] = np.asarray(
-                [i for i, _ in self.tag_rows]
-            )
+            pairs = [pair for _, p in self.tag_rows for pair in p]
+            data["tag_row_ids"] = np.asarray([i for i, _ in self.tag_rows])
             data["tag_row_lens"] = np.asarray(
                 [len(p) for _, p in self.tag_rows], dtype=np.int64
             )
-            names = [t for _, p in self.tag_rows for t, _ in p]
+            names = [t for t, _ in pairs]
             data["tag_names"] = (
                 np.asarray(names) if names else np.asarray([], dtype="U1")
             )
             data["tag_confs"] = np.asarray(
-                [c for _, p in self.tag_rows for _, c in p],
-                dtype=np.float64,
+                [c for _, c in pairs], dtype=np.float64
             )
         with open(path, "wb") as f:
             np.savez(f, **data)
@@ -242,39 +278,18 @@ class HotSearchIndex:
         """Boot the artifact from a :meth:`save` file — numpy only, no
         SparkSession (equivalence with the live-built copy is pinned
         per mode in tests/test_serving.py)."""
-        import numpy as np
-
         with np.load(path, allow_pickle=False) as z:
-            image_col = (
-                str(z["image_col"][()]) if "image_col" in z else "image_id"
+            a = {k: z[k] for k in z.files}
+        tag_rows = None
+        if "tag_row_lens" in a:
+            tag_rows = _tag_rows(
+                a["tag_row_ids"], a["tag_row_lens"], a["tag_names"],
+                a["tag_confs"],
             )
-            image_ids = z["image_ids"] if "image_ids" in z else None
-            image_mat = z["image_mat"] if "image_mat" in z else None
-            seg_ids = (
-                z["seg_image_ids"] if "seg_image_ids" in z else None
-            )
-            seg_mat = z["seg_mat"] if "seg_mat" in z else None
-            tag_rows = None
-            if "tag_row_lens" in z:
-                ids = z["tag_row_ids"].tolist()
-                lens = z["tag_row_lens"].tolist()
-                names = z["tag_names"].tolist()
-                confs = z["tag_confs"].tolist()
-                tag_rows, pos = [], 0
-                for i, n in zip(ids, lens):
-                    tag_rows.append(
-                        (
-                            i,
-                            [
-                                (str(names[pos + j]), float(confs[pos + j]))
-                                for j in range(n)
-                            ],
-                        )
-                    )
-                    pos += n
         return cls(
-            image_ids, image_mat, seg_ids, seg_mat, tag_rows,
-            image_col=image_col,
+            a.get("image_ids"), a.get("image_mat"), a.get("seg_image_ids"),
+            a.get("seg_mat"), tag_rows,
+            image_col=str(a.get("image_col", "image_id")),
         )
 
     # -- per-image segment maxima (the W4 argmax kernel) ----------------
@@ -296,8 +311,41 @@ class HotSearchIndex:
         maxima = np.maximum.reduceat(sims, starts, axis=0)
         return groups, maxima
 
-    def _cand_mask_for_images(self, images: np.ndarray) -> np.ndarray:
-        return np.isin(self.seg_image_ids, images)
+    def _avg_maxima(self, images: np.ndarray, query_rows: Sequence[tuple]):
+        """(image id, avg of the per-query-segment maxima, maxima row)
+        for each of ``images`` that has segments; the avg sums left to
+        right, matching the Catalyst column sum."""
+        qmat = np.asarray(
+            [[float(x) for x in v] for _, v in query_rows],
+            dtype=self.seg_mat.dtype,
+        )
+        gids, maxima = self._segment_maxima(
+            np.isin(self.seg_image_ids, images), qmat
+        )
+        out = []
+        for g, row in zip(gids.tolist(), maxima):
+            total = 0.0 + row[0]
+            for j in range(1, len(qmat)):
+                total = total + row[j]
+            out.append((g, total / float(len(qmat)), row))
+        return out
+
+    # -- the four modes --------------------------------------------------
+
+    def _whole_scores(self, query_vec: Sequence[float], allowed: set | None):
+        """(ids, calibrated whole scores dot + 1.0) over the images in
+        ``allowed``. The query is cast to the MATRIX dtype: a float32
+        artifact scores in float32 (mixed-dtype matmul would silently
+        materialize a float64 copy of the whole matrix for BLAS)."""
+        q = np.asarray([float(x) for x in query_vec], dtype=self.image_mat.dtype)
+        scores = self.image_mat @ q + 1.0
+        ids = self.image_ids
+        if allowed is not None:
+            keep = np.asarray(
+                [i in allowed for i in ids.tolist()], dtype=bool
+            )
+            ids, scores = ids[keep], scores[keep]
+        return ids, scores
 
     # -- the four modes --------------------------------------------------
 
@@ -307,17 +355,7 @@ class HotSearchIndex:
     ) -> list[dict]:
         """retrieval.knn twin: score = dot + 1.0, (score DESC, id ASC),
         top k → [{image_col, score}]."""
-        # query cast to the MATRIX dtype: a float32 artifact scores in
-        # float32 (mixed-dtype matmul would silently materialize a
-        # float64 copy of the whole matrix for BLAS)
-        q = np.asarray([float(x) for x in query_vec], dtype=self.image_mat.dtype)
-        scores = self.image_mat @ q + 1.0
-        ids = self.image_ids
-        if allowed is not None:
-            keep = np.asarray(
-                [i in allowed for i in ids.tolist()], dtype=bool
-            )
-            ids, scores = ids[keep], scores[keep]
+        ids, scores = self._whole_scores(query_vec, allowed)
         take = _topk_order(scores, ids, k)
         return [
             {self.image_col: ids[i].item(), "score": float(scores[i])}
@@ -337,10 +375,6 @@ class HotSearchIndex:
         heuristic), ordering (round6(avg) DESC, id ASC)."""
         if self.seg_groups is None:  # shard/corpus with no segments
             return []
-        qmat = np.asarray(
-            [[float(x) for x in v] for _, v in query_rows],
-            dtype=self.seg_mat.dtype,
-        )
         groups = self.seg_groups
         if allowed is not None:
             keep = np.asarray(
@@ -349,17 +383,10 @@ class HotSearchIndex:
             groups = groups[keep]
         if candidate_cap is not None:
             groups = groups[: int(candidate_cap)]  # unique() ⇒ sorted asc
-        mask = self._cand_mask_for_images(groups)
-        gids, maxima = self._segment_maxima(mask, qmat)
-        nq = len(query_rows)
-        out = []
-        for gi, g in enumerate(gids.tolist()):
-            row = maxima[gi]
-            total = 0.0 + row[0]
-            for j in range(1, nq):  # left-to-right, matching the
-                total = total + row[j]  # Catalyst column sum
-            avg = total / float(nq)
-            out.append((g, avg, float(row.max())))
+        out = [
+            (g, avg, float(row.max()))
+            for g, avg, row in self._avg_maxima(groups, query_rows)
+        ]
         out.sort(key=lambda r: (-round_half_up(r[1], 6), r[0]))
         return [
             {
@@ -383,36 +410,17 @@ class HotSearchIndex:
         the calibrated whole score, phase-2 segment avg-of-maxima (raw
         cosine) for pool members only, missing → 0.0, hybrid =
         w·whole + w·segment, (round6(hybrid) DESC, id ASC)."""
-        q = np.asarray([float(x) for x in query_vec], dtype=self.image_mat.dtype)
-        scores = self.image_mat @ q + 1.0
-        ids = self.image_ids
-        if allowed is not None:
-            keep = np.asarray(
-                [i in allowed for i in ids.tolist()], dtype=bool
-            )
-            ids, scores = ids[keep], scores[keep]
+        ids, scores = self._whole_scores(query_vec, allowed)
         pool = max(int(top_k) * 20, 100)
         take = _topk_order(scores, ids, pool)
         pool_ids = ids[take]
         whole_by_id = dict(zip(pool_ids.tolist(), scores[take].tolist()))
 
-        qmat = np.asarray(
-            [[float(x) for x in v] for _, v in query_rows],
-            dtype=(
-                self.seg_mat.dtype if self.seg_mat is not None else np.float64
-            ),
-        )
         seg_by_id: dict = {}
         if self.seg_mat is not None:
-            mask = self._cand_mask_for_images(pool_ids)
-            gids, maxima = self._segment_maxima(mask, qmat)
-            nq = len(query_rows)
-            for gi, g in enumerate(gids.tolist()):
-                row = maxima[gi]
-                total = 0.0 + row[0]
-                for j in range(1, nq):
-                    total = total + row[j]
-                seg_by_id[g] = total / float(nq)
+            seg_by_id = {
+                g: avg for g, avg, _ in self._avg_maxima(pool_ids, query_rows)
+            }
 
         ww, ws = float(whole_weight), float(segment_weight)
         out = []
@@ -446,13 +454,8 @@ class HotSearchIndex:
             hits = [(t, c) for t, c in pairs if t in tagset and c >= floor]
             if not hits:
                 continue
-            out.append(
-                (
-                    image_id,
-                    len({t for t, _ in hits}),
-                    max(c for _, c in hits),
-                )
-            )
+            n_tags = len({t for t, _ in hits})
+            out.append((image_id, n_tags, max(c for _, c in hits)))
         out.sort(key=lambda r: (-r[1], -r[2], r[0]))
         return [
             {
@@ -506,13 +509,9 @@ class ShardedHotIndex:
       then each shard computes segment scores for its pool members.
 
     Equivalence with the single index (and therefore with the Spark
-    plans) is pinned for every mode in tests/test_serving.py.
-
-    In-process this class mainly exists as the executable proof +
-    merge reference; a real deployment runs one shard per process
-    (each built by a Spark job writing that shard's artifact) and a
-    thin gather tier that concatenates the per-shard row lists exactly
-    as these methods do.
+    plans) is pinned for every mode in tests/test_serving.py. A real
+    deployment runs one shard per process (:meth:`from_paths`) behind a
+    thin gather tier that merges the per-shard rows as these methods do.
     """
 
     def __init__(self, shards: list[HotSearchIndex], image_col: str):

@@ -10,6 +10,7 @@ oracle operates on naive timestamps).
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -85,23 +86,26 @@ def get_spark(
         # shuffle-writer threshold is a STATIC core conf that cannot
         # change after SparkContext start, so a second caller's
         # SPARK_GRAFT_SHUFFLE_BYPASS override would not take effect.
-        # Surface the mismatch instead of hiding it (ADVICE r13).
+        # Surface the mismatch instead of hiding it (ADVICE r13). The
+        # values are compared as the integers Spark parses ("0" and
+        # "00" are the same threshold); an unreadable conf or a value
+        # that is not an integer is not reported.
         want = os.environ.get("SPARK_GRAFT_SHUFFLE_BYPASS", "0")
         try:
             have = active.sparkContext.getConf().get(
                 "spark.shuffle.sort.bypassMergeThreshold", "200"
             )
+            mismatch = int(have) != int(want)
         except Exception:
-            have = None
-        if have is not None and have != want:
-            import sys
-
-            print(
+            mismatch = False
+        if mismatch:
+            warnings.warn(
                 "get_spark: attaching to an active session whose "
                 f"spark.shuffle.sort.bypassMergeThreshold={have} differs "
                 f"from the requested {want}; the static conf cannot be "
                 "changed mid-session",
-                file=sys.stderr,
+                RuntimeWarning,
+                stacklevel=2,
             )
     if extra_conf:
         for k, v in extra_conf.items():

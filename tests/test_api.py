@@ -300,6 +300,27 @@ def test_curation_pipeline_dedup_near_drops_near_duplicates(spark):
         assert kept == all_ids - expected_drops, f"portable={portable}"
 
 
+def test_dedup_near_refuses_unpersist_without_eager_checkpoint(
+    spark, sf_dir, monkeypatch
+):
+    """dedup_near unpersists its source only once the pair frame is a
+    materialized checkpoint (plan root LogicalRDD). A lazy pair frame
+    must raise, not assert: ``python -O`` strips asserts."""
+    from data_feature_extraction_and_retrieval_pipeline_spark.api import (
+        CurationPipeline,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    # a no-op checkpoint leaves the mining plan as the pair frame's root
+    monkeypatch.setattr(
+        type(docs), "localCheckpoint", lambda self, eager=True: self
+    )
+    with pytest.raises(RuntimeError, match="eagerly checkpointed"):
+        CurationPipeline(docs).dedup_near(portable=True)
+
+
 # ---------------------------------------------------------------------------
 # search_content end-to-end: upload → encode → (segment) → search, all
 # four modes through the model seam with an injected fake encoder

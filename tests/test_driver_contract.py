@@ -161,6 +161,21 @@ def test_freshness_invariants():
     names = list(Q.queries())
     head = set(names[:50])
 
+    # a key written twice in the literal silently keeps only its last
+    # floor, so the map must name every query exactly once
+    import ast
+    from collections import Counter
+
+    tree = ast.parse(Path(Q.__file__).read_text())
+    (literal,) = [
+        node.value for node in tree.body
+        if isinstance(node, ast.AnnAssign)
+        and getattr(node.target, "id", None) == "_TOUCHED"
+    ]
+    counts = Counter(ast.literal_eval(k) for k in literal.keys)
+    dups = sorted(k for k, c in counts.items() if c > 1)
+    assert not dups, f"_TOUCHED names these queries more than once: {dups}"
+
     assert set(Q._TOUCHED) == set(Q._QUERIES), (
         "witness-floor map out of sync with the registry: "
         f"missing={set(Q._QUERIES) - set(Q._TOUCHED)} "

@@ -654,3 +654,184 @@ def test_sharded_float32_from_paths(engine, tmp_path):
         sharded.hybrid(qvec, seg_rows, 5),
         hot.hybrid(qvec, seg_rows, 5), 1e-6,
     )
+
+
+# -- the Arrow build against a row-collect reference ------------------------
+
+
+def _row_collect_reference(eng):
+    """The artifact built the row-at-a-time way: ``collect()`` then
+    ``np.asarray`` over the Python values (the reference the Arrow
+    build must reproduce bit for bit)."""
+    import numpy as np
+
+    from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
+        HotSearchIndex,
+    )
+
+    def vectors(df, value):
+        rows = df.select(eng.image_col, value).collect()
+        return (
+            np.asarray([r[0] for r in rows]),
+            np.asarray([r[1] for r in rows], dtype=np.float64),
+        )
+
+    tag_rows = [
+        (r[0], [(t["tag"], float(t["confidence"])) for t in (r[1] or [])])
+        for r in eng.segment_tags.select(eng.image_col, "tags").collect()
+    ]
+    return HotSearchIndex(
+        *vectors(eng.images, "embedding"),
+        *vectors(eng.segments, "clip_features"),
+        tag_rows,
+        image_col=eng.image_col,
+    )
+
+
+def _assert_same_artifact(built, ref):
+    import numpy as np
+
+    for attr in ("image_ids", "image_mat", "seg_image_ids", "seg_mat"):
+        got, want = getattr(built, attr), getattr(ref, attr)
+        assert got.dtype == want.dtype, (attr, got.dtype, want.dtype)
+        assert np.array_equal(got, want), attr
+    assert built.tag_rows == ref.tag_rows
+    assert [type(i) for i, _ in built.tag_rows] == [
+        type(i) for i, _ in ref.tag_rows
+    ]
+
+
+def test_arrow_build_equals_row_collect_float32(engine):
+    """The fixture layout: bigint ids, ``array<float>`` vectors."""
+    from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
+        HotSearchIndex,
+    )
+
+    assert engine.images.schema["embedding"].dataType.simpleString() == (
+        "array<float>"
+    )
+    built = HotSearchIndex.from_engine(engine)
+    ref = _row_collect_reference(engine)
+    assert built.image_ids.dtype.kind == "i"
+    _assert_same_artifact(built, ref)
+
+
+def test_arrow_build_equals_row_collect_double_string_ids(spark):
+    """``array<double>`` vectors keyed by string image ids (``<U``
+    dtype, so ``ids[i].item()`` still hands out ``str``), including a
+    null tag list."""
+    import random
+
+    from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
+        HotSearchIndex,
+    )
+
+    rnd = random.Random(7)
+
+    def vec():
+        return [rnd.uniform(-1.0, 1.0) for _ in range(5)]
+
+    ids = [f"img-{i:03d}" for i in range(40)]
+    eng = Engine(
+        spark.createDataFrame(
+            [(i, vec()) for i in ids],
+            "image_id string, embedding array<double>",
+        ),
+        spark.createDataFrame(
+            [(i, vec()) for i in ids for _ in range(rnd.randint(1, 4))],
+            "image_id string, clip_features array<double>",
+        ),
+        spark.createDataFrame(
+            [(ids[0], None), (ids[1], []), (ids[2], [("cat", 0.5)])]
+            + [(i, [("dog", rnd.random()), ("cat", 0.25)]) for i in ids[3:]],
+            "image_id string, "
+            "tags array<struct<tag string, confidence double>>",
+        ),
+    )
+    built, ref = HotSearchIndex.from_engine(eng), _row_collect_reference(eng)
+    assert built.image_ids.dtype.kind == "U"
+    _assert_same_artifact(built, ref)
+    assert built.tag_rows[0] == (ids[0], [])
+    qvec = vec()
+    assert built.whole(qvec, 3) == ref.whole(qvec, 3)
+    assert isinstance(built.whole(qvec, 3)[0]["image_id"], str)
+
+
+# -- build input guards -------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "rows, message",
+    [
+        ([(0, [1.0, 2.0]), (1, None)], "images.embedding holds a null vector"),
+        (
+            [(0, [1.0, 2.0]), (1, [3.0, None])],
+            "images.embedding holds a null vector element",
+        ),
+        (
+            [(0, [1.0, 2.0]), (1, [3.0, 4.0, 5.0])],
+            "images.embedding holds vectors of unequal width",
+        ),
+    ],
+    ids=["null-vector", "null-element", "ragged"],
+)
+def test_build_refuses_bad_image_vectors(spark, rows, message):
+    """Arrow reads a null element as NaN, so the build refuses every
+    input the matrix cannot hold faithfully, naming table and
+    column."""
+    from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
+        HotSearchIndex,
+    )
+
+    eng = Engine(
+        spark.createDataFrame(rows, "image_id long, embedding array<float>")
+    )
+    with pytest.raises(ValueError, match=message):
+        HotSearchIndex.from_engine(eng)
+
+
+def test_build_refuses_ragged_segment_vectors(spark):
+    from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
+        HotSearchIndex,
+    )
+
+    eng = Engine(
+        spark.createDataFrame(
+            [(0, [1.0, 2.0])], "image_id long, embedding array<float>"
+        ),
+        spark.createDataFrame(
+            [(0, [1.0, 2.0]), (0, [1.0])],
+            "image_id long, clip_features array<float>",
+        ),
+    )
+    with pytest.raises(
+        ValueError, match="segments.clip_features holds vectors of unequal"
+    ):
+        HotSearchIndex.from_engine(eng)
+
+
+def test_build_empty_tables_keep_zero_matrix(spark):
+    """Empty tables build a (0, 0) matrix, so the hot tier still
+    raises the cold tier's 'images table is empty' error."""
+    import numpy as np
+
+    from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
+        HotSearchIndex,
+    )
+
+    eng = Engine(
+        spark.createDataFrame([], "image_id long, embedding array<float>"),
+        spark.createDataFrame(
+            [], "image_id long, clip_features array<float>"
+        ),
+        spark.createDataFrame(
+            [],
+            "image_id long, tags array<struct<tag string, confidence float>>",
+        ),
+    )
+    hot = HotSearchIndex.from_engine(eng)
+    assert hot.image_mat.shape == (0, 0) and hot.image_mat.dtype == np.float64
+    assert len(hot.image_ids) == 0 and hot.dim == 0
+    assert hot.seg_mat is None and hot.tag_rows == []
+    with pytest.raises(ValueError, match="images table is empty"):
+        eng.search_content_rows(b"xx", filename="q.png", mode="whole")
