@@ -17,6 +17,7 @@ from __future__ import annotations
 import threading
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import caching
@@ -42,6 +43,14 @@ def validate_upload(filename: str, n_bytes: int) -> None:
     ext = filename.rsplit(".", 1)[-1].lower() if "." in filename else ""
     if ext not in ALLOWED_EXTENSIONS:
         raise ValueError(f"extension {ext!r} not in {ALLOWED_EXTENSIONS}")
+
+
+def _require_positive(**values) -> None:
+    """Both tiers refuse a non-positive ``top_k`` or ``max_segments``
+    with the same ValueError (the service answers it with a 400)."""
+    for name, value in values.items():
+        if int(value) < 1:
+            raise ValueError(f"{name} must be >= 1, got {value}")
 
 
 class Engine:
@@ -177,6 +186,7 @@ class Engine:
         bit-exactness-sensitive callers pass False (SCALING.md
         "Size-parameterized physical strategies").
         """
+        _require_positive(top_k=top_k)
         images, segments = self.images, self.segments
         if tag_filter:
             if self.segment_tags is None:
@@ -295,11 +305,12 @@ class Engine:
         query_segments = None
         if seg_rows is not None:
             query_segments = self.images.sparkSession.createDataFrame(
-                seg_rows, "q_segment_id long, features array<float>"
+                [(sid, v.tolist()) for sid, v in seg_rows],
+                "q_segment_id long, features array<float>",
             )
         return self.search(
             mode,
-            query_vec=qvec,
+            query_vec=None if qvec is None else qvec.tolist(),
             query_segments=query_segments,
             top_k=top_k,
             **kwargs,
@@ -313,13 +324,14 @@ class Engine:
         dim: int | None = None,
         max_segments: int = 10,
         model_loader=None,
-    ) -> tuple[list[float] | None, list[tuple[int, list[float]]] | None]:
+    ) -> tuple[np.ndarray | None, list[tuple[int, np.ndarray]] | None]:
         """The upload → encode step shared by the Spark and hot
         serving paths: validate, segment the query payload when the
         mode needs segments, batch-encode through the model seam.
         Returns ``(query_vec | None, [(q_segment_id, features)] |
-        None)`` — driver-side values, so BOTH tiers score the
-        identical float32-exact query vectors."""
+        None)`` as float32 numpy rows of one encoded matrix, so BOTH
+        tiers score the identical query vectors: the hot tier uses the
+        arrays, the Spark tier their ``.tolist()`` floats."""
         from .ml.encoders import (
             _hash_projection,
             _l2_normalize_rows,
@@ -327,6 +339,7 @@ class Engine:
         )
 
         validate_upload(filename, len(payload))
+        _require_positive(max_segments=max_segments)
         needs_vec = mode in ("whole", "hybrid")
         needs_segs = mode in ("segment", "hybrid")
         real = None
@@ -358,21 +371,14 @@ class Engine:
         # batch-shaped and the reference batch-encodes its crops too) —
         # not one GPU round-trip per segment
         blobs = ([payload] if needs_vec else []) + [c for _, c in crops]
-        vecs: list[list[float]] = []
+        vecs = None
         if blobs:
             if real is not None:
-                import numpy as np
-
-                mat = np.asarray(
-                    real.encode_image_batch(blobs), dtype=np.float32
+                vecs = _l2_normalize_rows(
+                    np.asarray(real.encode_image_batch(blobs), dtype=np.float32)
                 )
-                vecs = [
-                    [float(x) for x in row] for row in _l2_normalize_rows(mat)
-                ]
             else:
-                vecs = [
-                    [float(x) for x in _hash_projection(b, dim)] for b in blobs
-                ]
+                vecs = np.stack([_hash_projection(b, dim) for b in blobs])
         qvec = vecs[0] if needs_vec else None
         seg_rows = None
         if needs_segs:
@@ -429,8 +435,8 @@ class Engine:
                 if cached.image_ids is not None else None,
                 "segments": len(cached.seg_image_ids)
                 if cached.seg_image_ids is not None else None,
-                "segment_tags": len(cached.tag_rows)
-                if cached.tag_rows is not None else None,
+                "segment_tags": len(cached.tag_table)
+                if cached.tag_table is not None else None,
             }
             self._hot = cached
             self._hot_gen += 1
@@ -479,6 +485,7 @@ class Engine:
         collected rows instead of a DataFrame. ``query_rows`` is the
         driver-side ``[(q_segment_id, features), …]`` the serving path
         already holds (no query DataFrame round-trip)."""
+        _require_positive(top_k=top_k)
         hot = self.hot()
         allowed = None
         if tag_filter:

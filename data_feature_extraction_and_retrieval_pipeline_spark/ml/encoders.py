@@ -18,6 +18,7 @@ plays the role of pre-extracted CLIP vectors).
 from __future__ import annotations
 
 import hashlib
+import threading
 
 import numpy as np
 import pandas as pd
@@ -74,12 +75,21 @@ def _l2_normalize_rows(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
+_PROJECTION_RNG = threading.local()
+
+
 def _hash_projection(payload: bytes, dim: int) -> np.ndarray:
     """Deterministic pseudo-embedding: sha256-seeded projection,
     L2-normalized (mirrors the reference's normalize-at-extraction,
-    extract_clip_features.py:30)."""
+    extract_clip_features.py:30). Each thread re-seeds one
+    ``RandomState``: ``seed(s)`` resets the generator and its cached
+    normal exactly as ``RandomState(s)`` does, without building one
+    per payload."""
     seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big") % (2**32)
-    rng = np.random.RandomState(seed)
+    rng = getattr(_PROJECTION_RNG, "rng", None)
+    if rng is None:
+        rng = _PROJECTION_RNG.rng = np.random.RandomState()
+    rng.seed(seed)
     v = rng.standard_normal(dim).astype(np.float32)
     n = np.linalg.norm(v)
     return v / n if n > 0 else v

@@ -64,13 +64,24 @@ logic lives here. Two serving tiers share the handlers (SCALING.md
 One driver serves all threads (ThreadingHTTPServer + Spark's
 thread-safe session), the same concurrency model as the reference's
 single-process Flask app.
+
+Request bodies (no Flask/werkzeug in this stack): multipart/form-data
+is split on its boundary delimiter with ``bytes`` operations (RFC 7578
+over RFC 2046's delimiter grammar), and only each part's small header
+block is parsed — into an ``email.message.Message`` holding just those
+headers, whose ``get_param`` / ``get_filename`` / ``get_payload`` give
+the stdlib's parameter rules (quoted and RFC 2231 filenames) and
+Content-Transfer-Encoding decoding. The form and files equal what the
+stdlib ``email`` feedparser returns for the whole body (the reference
+tests/test_service.py keeps), at a fraction of its per-request cost.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import threading
-from email.parser import BytesParser
+from email.message import Message
 from email.policy import default as _EMAIL_POLICY
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -88,28 +99,131 @@ def _allowed_file(filename: str) -> bool:
     )
 
 
+_EOL = re.compile(rb"\r\n|\r|\n")
+# a header-block line: a field, a folded continuation, or an mbox
+# "From " line (skipped, as the stdlib parser does)
+_HEADER_LINE = re.compile(rb"From |[\x21-\x39\x3b-\x7e]*:|[\t ]")
+
+
+def _delimiters(body: bytes, sep: bytes):
+    """``(start, end, is_close)`` of each delimiter line in ``body``:
+    ``--boundary`` at the body start or after a line break, an optional
+    ``--`` (the close delimiter), optional blanks, then a line break or
+    the end of the body. ``end`` is past the line break."""
+    n = len(body)
+    i = body.find(sep)
+    while i >= 0:
+        j = i + len(sep)
+        if i == 0 or body[i - 1] in b"\r\n":
+            close = body.startswith(b"--", j)
+            k = j + 2 if close else j
+            while k < n and body[k] in b" \t":
+                k += 1
+            eol = _EOL.match(body, k)
+            if eol or k == n:
+                yield i, eol.end() if eol else n, close
+        i = body.find(sep, j)
+
+
+def _header_text(name: str, value: bytes) -> str:
+    """A header value as the stdlib's default policy reads it: line
+    breaks removed, non-ASCII bytes decoded as UTF-8, encoded words
+    (``=?charset?…?=``, rare in form data) decoded by the policy
+    itself."""
+    value = value.replace(b"\r", b"").replace(b"\n", b"")
+    if b"=?" in value:
+        return str(
+            _EMAIL_POLICY.header_fetch_parse(
+                name, value.decode("ascii", "surrogateescape")
+            )
+        )
+    return value.decode("utf-8", "replace")
+
+
+def _read_part(raw: bytes) -> tuple[Message, bytes]:
+    """One body part as (a ``Message`` holding its headers, payload).
+    The header block ends at the first blank line, or at the first
+    line that is neither a field nor a continuation (that line starts
+    the payload); the line break before the next delimiter belongs to
+    the delimiter, so one trailing line break is dropped."""
+    fields: list[tuple[bytes, list[bytes]]] = []
+    pos = 0
+    while pos < len(raw):
+        eol = _EOL.search(raw, pos)
+        end = eol.end() if eol else len(raw)
+        line = raw[pos:end]
+        if not _HEADER_LINE.match(line):
+            if _EOL.match(line):  # the blank line closing the block
+                pos = end
+            break
+        pos = end
+        if line[:1] in b" \t":
+            if fields:  # a leading continuation line is dropped
+                fields[-1][1].append(line)
+        elif not line.startswith(b"From "):
+            colon = line.index(b":")
+            if colon:  # a field with no name is dropped
+                fields.append(
+                    (line[:colon], [line[colon + 1 :].lstrip(b" \t")])
+                )
+    msg = Message()
+    for name, lines in fields:
+        key = name.decode("ascii", "surrogateescape")
+        msg[key] = _header_text(key, b"".join(lines))
+    payload = raw[pos:]
+    if payload.endswith(b"\r\n"):
+        payload = payload[:-2]
+    elif payload.endswith((b"\r", b"\n")):
+        payload = payload[:-1]
+    if msg.get("content-transfer-encoding") is not None:
+        msg.set_payload(payload.decode("ascii", "surrogateescape"))
+        payload = msg.get_payload(decode=True)
+    return msg, payload
+
+
 def _parse_multipart(body: bytes, content_type: str):
-    """Parse a multipart/form-data body with the stdlib email parser
-    (no Flask/werkzeug in this stack): returns (form: dict[str, str],
-    files: dict[str, (filename, bytes)])."""
-    head = f"Content-Type: {content_type}\r\nMIME-Version: 1.0\r\n\r\n"
-    msg = BytesParser(policy=_EMAIL_POLICY).parsebytes(
-        head.encode("utf-8") + body
-    )
+    """Parse a multipart/form-data body: returns (form: dict[str, str],
+    files: dict[str, (filename, bytes)]). Parts are the spans between
+    delimiter lines: text before the first one is preamble, text after
+    the close delimiter is epilogue, delimiter lines that directly
+    follow a delimiter are skipped, and without a close delimiter the
+    last part runs to the end of the body. No multipart Content-Type,
+    no boundary or no delimiter gives an empty form. Parts without a
+    ``name`` are skipped; later parts win on repeated names. Nested
+    multipart/* and message/* parts are taken as raw bytes (form data
+    carries none). Unquoted parameter values are read as RFC 2045
+    tokens, where the stdlib's default policy reads an unquoted ``'``
+    as RFC 2231 syntax (it finds no boundary in ``boundary=a'b``)."""
     form: dict[str, str] = {}
     files: dict[str, tuple[str, bytes]] = {}
-    if not msg.is_multipart():
+    head = Message()
+    head["Content-Type"] = _header_text("Content-Type", content_type.encode())
+    boundary = head.get_boundary()
+    if head.get_content_maintype() != "multipart" or boundary is None:
         return form, files
-    for part in msg.iter_parts():
-        name = part.get_param("name", header="content-disposition")
+
+    def add(raw: bytes) -> None:
+        msg, payload = _read_part(raw)
+        name = msg.get_param("name", header="content-disposition")
         if name is None:
-            continue
-        payload = part.get_payload(decode=True) or b""
-        filename = part.get_filename()
+            return
+        filename = msg.get_filename()
         if filename is not None:
             files[name] = (filename, payload)
         else:
             form[name] = payload.decode("utf-8", errors="replace")
+
+    start = None  # where the current part begins; None in the preamble
+    for i, end, close in _delimiters(body, b"--" + boundary.encode()):
+        if start is not None and i > start:
+            add(body[start:i])
+            if close:
+                return form, files
+        elif start is None and close:
+            return form, files  # closed before any part
+        start = end
+    if start is not None:
+        add(body[start:])
     return form, files
 
 
@@ -134,8 +248,8 @@ def _rows_json(df, top_k: int) -> list[dict]:
 
 
 class _ResponseCache:
-    """Bounded LRU over (path, body-digest[, percolator epoch]) → 200
-    response — the reference deployment's ES REQUEST CACHE twin (ES
+    """Bounded LRU over (path, body-digest[, percolator epoch]) → the
+    encoded 200 response ``(code, bytes)`` — the reference deployment's ES REQUEST CACHE twin (ES
     caches search responses keyed on the request body against an
     immutable shard snapshot). Sound here for the same reason: an
     Engine's tables are an immutable snapshot, the model seam is
@@ -192,12 +306,16 @@ class _Handler(BaseHTTPRequestHandler):
         pass
 
     def _json(self, code: int, obj) -> None:
+        payload = json.dumps(obj).encode("utf-8")
         key = getattr(self, "_cache_key", None)
         if key is not None and code == 200:
-            # only successful, fully-built responses enter the cache;
-            # 4xx/5xx always recompute (errors may be transient)
-            type(self).resp_cache.put(key, (code, obj))
-        payload = json.dumps(obj).encode("utf-8")
+            # only successful, fully-built responses enter the cache,
+            # encoded, so a hit sends bytes; 4xx/5xx always recompute
+            # (errors may be transient)
+            type(self).resp_cache.put(key, (code, payload))
+        self._send(code, payload)
+
+    def _send(self, code: int, payload: bytes) -> None:
         self.send_response(code)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(payload)))
@@ -327,7 +445,7 @@ class _Handler(BaseHTTPRequestHandler):
             )
             hit = cache.get(key)
             if hit is not None:
-                self._json(*hit)
+                self._send(*hit)
                 return
             self._cache_key = key
         try:

@@ -46,16 +46,26 @@ Scale posture (the 100 TB story):
   hot=False)`` keeps the pure-Spark serving path alive and tested.
 
 Float discipline: per-pair similarities are numpy matmuls in the
-RESIDENT MATRIX'S dtype. The live/float64 tier is bit-identical to
-the operator layer's Arrow path (functions/vectors.py ``dot_batch``
-is the same matmul); the whole-image dot accumulates in SIMD-blocked
-order where the JVM HOF folds left-to-right; results agree to ~1e-13,
-absorbed by the 1e-6 rounded-score ordering the engine certifies
-under (queries.py module header). A float32 artifact scores in
+RESIDENT MATRIX'S dtype. The live/float64 tier computes the same
+products as the operator layer's Arrow path (functions/vectors.py
+``dot_batch`` is the same matmul); the whole-image dot accumulates in
+SIMD-blocked order where the JVM HOF folds left-to-right; results
+agree to ~1e-13, absorbed by the 1e-6 rounded-score ordering the
+engine certifies under (queries.py module header). Segment scoring
+multiplies only the candidate rows — a slice view of the resident
+matrix when the candidates are one contiguous run of images, a
+gathered copy otherwise — and BLAS blocks a candidate-sized matmul
+differently from a full-matrix one, so those dots are not
+bit-identical to the full matmul's either; the same 1e-6 rounded
+ordering absorbs the difference. A float32 artifact scores in
 float32 — ~1e-7 relative quantization vs the float64 tier, same
 1e-6-rounding absorption, pinned at 1e-6 tolerance in
 tests/test_serving.py. Display rounding replicates Spark's
-HALF_UP-on-shortest-decimal exactly.
+HALF_UP-on-shortest-decimal exactly (:func:`round6` vectorizes it).
+
+Request-path discipline: only the k returned rows become Python
+objects. Tag filters, segment maxima, averages, rank keys and the
+hybrid join are numpy array operations over the resident layout.
 """
 
 from __future__ import annotations
@@ -91,6 +101,24 @@ def round_half_up(x: float, digits: int = 6) -> float:
     )
 
 
+def round6(x) -> np.ndarray:
+    """:func:`round_half_up` to 6 digits over a float64 array, bit for
+    bit. ``floor(|x|·1e6 + 0.5)/1e6`` with the sign restored is exact
+    wherever the scaled value sits more than 1e-7 from a .5 tie: the
+    product and the shortest-decimal value of ``x`` differ by under
+    2e-8 there (|x·1e6| < 2**26), so both floor to the same integer,
+    and one correctly rounded division gives the nearest double, as
+    ``float(Decimal)`` does. Near-ties, huge values and non-finite
+    values take the scalar ``Decimal`` path."""
+    x = np.asarray(x, dtype=np.float64)
+    scaled = np.abs(x * 1e6)
+    out = np.copysign(np.floor(scaled + 0.5), x) / 1e6
+    slow = ~(scaled < 2.0**26) | (np.abs(scaled % 1.0 - 0.5) < 1e-7)
+    for i in np.flatnonzero(slow).tolist():
+        out[i] = round_half_up(x[i], 6)
+    return out
+
+
 def _topk_order(scores: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     """Indices of the top-k rows under (score DESC, id ASC) — the
     engine's deterministic tiebreak order."""
@@ -98,10 +126,16 @@ def _topk_order(scores: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     return order[: int(k)]
 
 
+def _id_array(ids) -> np.ndarray:
+    """An ``allowed=`` id collection (set, list or array) as an array
+    for ``np.isin``."""
+    return ids if isinstance(ids, np.ndarray) else np.asarray(list(ids))
+
+
 def _ids(col) -> np.ndarray:
     """An Arrow id column with the dtype ``np.asarray`` gives its
     Python values: int64 for integer ids, ``<U`` for strings — the
-    scorers hand ids out through ``.item()``."""
+    scorers hand ids out through ``.tolist()``."""
     import pyarrow as pa
 
     if pa.types.is_integer(col.type) and not col.null_count:
@@ -131,16 +165,86 @@ def _matrix(col, name: str) -> np.ndarray:
     return flat.to_numpy().astype(np.float64).reshape(len(vecs), widths[0])
 
 
-def _tag_rows(ids, lens, names, confs) -> list[tuple]:
-    """``(image_id, [(tag, confidence), …])`` rows from the flat tag
-    layout: one id and one pair count per row, then every row's names
-    and confidences back to back."""
-    pairs = list(zip(names.tolist(), confs.astype(np.float64).tolist()))
-    ends = np.cumsum(lens).tolist()
-    return [
-        (i, pairs[e - n : e])
-        for i, n, e in zip(ids.tolist(), lens.tolist(), ends)
-    ]
+class TagTable:
+    """Per-image tag lists in flat CSR form — the resident layout of
+    the tag modes. Row ``r`` is image ``row_ids[r]`` and owns pairs
+    ``offsets[r]:offsets[r + 1]``; a pair is a tag code into ``vocab``
+    (-1 for a null tag name, which never matches) and a float64
+    confidence. Rows keep their table order and are scored one by one,
+    so an image on two tag rows answers twice (the Spark plan groups
+    by image id: for such tables the tiers differ)."""
+
+    def __init__(self, row_ids, offsets, codes, vocab, confs):
+        self.row_ids = row_ids
+        self.offsets = offsets
+        self.codes = codes
+        self.vocab = vocab
+        self.confs = confs
+        self.pair_rows = np.repeat(np.arange(len(row_ids)), np.diff(offsets))
+        self._code = {t: i for i, t in enumerate(vocab.tolist())}
+
+    @classmethod
+    def from_pairs(cls, row_ids, lens, names, confs) -> "TagTable":
+        """From one id and one pair count per row, then every row's
+        tag names and confidences back to back (the :meth:`HotSearchIndex.save`
+        layout)."""
+        code: dict = {}
+        codes = np.fromiter(
+            (-1 if t is None else code.setdefault(t, len(code))
+             for t in np.asarray(names).tolist()),
+            dtype=np.int64, count=len(names),
+        )
+        vocab = np.asarray(list(code)) if code else np.asarray([], dtype=str)
+        offsets = np.zeros(len(lens) + 1, dtype=np.int64)
+        np.cumsum(lens, out=offsets[1:])
+        return cls(
+            np.asarray(row_ids), offsets, codes, vocab,
+            np.asarray(confs, dtype=np.float64),
+        )
+
+    @classmethod
+    def from_rows(cls, rows) -> "TagTable":
+        """From ``[(image_id, [(tag, confidence), …]), …]``."""
+        pairs = [pair for _, p in rows for pair in p]
+        return cls.from_pairs(
+            [i for i, _ in rows], [len(p) for _, p in rows],
+            [t for t, _ in pairs], [c for _, c in pairs],
+        )
+
+    def __len__(self) -> int:
+        return len(self.row_ids)
+
+    def names(self) -> list:
+        """Every pair's tag name, in pair order."""
+        vocab = self.vocab.tolist() + [None]  # code -1 → None
+        return [vocab[c] for c in self.codes.tolist()]
+
+    def rows(self) -> list[tuple]:
+        """The per-row form ``[(image_id, [(tag, confidence), …]), …]``."""
+        pairs = list(zip(self.names(), self.confs.tolist()))
+        bounds = self.offsets.tolist()
+        return [
+            (i, pairs[a:b])
+            for i, a, b in zip(self.row_ids.tolist(), bounds, bounds[1:])
+        ]
+
+    def take(self, keep: np.ndarray) -> "TagTable":
+        """The rows where boolean ``keep`` is set."""
+        pairs = keep[self.pair_rows]
+        offsets = np.zeros(int(keep.sum()) + 1, dtype=np.int64)
+        np.cumsum(np.diff(self.offsets)[keep], out=offsets[1:])
+        return TagTable(
+            self.row_ids[keep], offsets, self.codes[pairs], self.vocab,
+            self.confs[pairs],
+        )
+
+    def hits(self, tags: Sequence[str], min_confidence: float) -> np.ndarray:
+        """Boolean mask over pairs: tag in ``tags`` and confidence at or
+        above the floor."""
+        codes = [self._code[t] for t in {str(t) for t in tags} if t in self._code]
+        return np.isin(self.codes, codes) & (
+            self.confs >= float(min_confidence)
+        )
 
 
 class HotSearchIndex:
@@ -159,15 +263,15 @@ class HotSearchIndex:
         image_mat: np.ndarray | None,
         seg_image_ids: np.ndarray | None,
         seg_mat: np.ndarray | None,
-        tag_rows: list[tuple] | None,
+        tags: "TagTable | list[tuple] | None",
         image_col: str = "image_id",
     ):
         self.image_col = image_col
         self.image_ids = image_ids
         self.image_mat = image_mat
         self.dim = int(image_mat.shape[1]) if image_mat is not None else None
-        # segment rows sorted by image id → per-image contiguous slices
-        # (reduceat group boundaries), the layout every segment-mode
+        # segment rows sorted by image id → per-image contiguous row
+        # runs seg_starts[j]:seg_ends[j], the layout every segment-mode
         # aggregation walks
         if seg_mat is not None and len(seg_image_ids):
             order = np.argsort(seg_image_ids, kind="stable")
@@ -176,10 +280,26 @@ class HotSearchIndex:
             self.seg_groups, self.seg_starts = np.unique(
                 self.seg_image_ids, return_index=True
             )
+            self.seg_ends = np.append(
+                self.seg_starts[1:], len(self.seg_image_ids)
+            )
         else:
             self.seg_image_ids = self.seg_mat = None
-            self.seg_groups = self.seg_starts = None
-        self.tag_rows = tag_rows  # list of (image_id, [(tag, conf), …])
+            self.seg_groups = self.seg_starts = self.seg_ends = None
+        # tags: a TagTable, or the per-row form [(image_id, [(tag,
+        # conf), …]), …] it is built from
+        if tags is not None and not isinstance(tags, TagTable):
+            tags = TagTable.from_rows(tags)
+        self.tag_table = tags
+        self._tag_rows = None
+
+    @property
+    def tag_rows(self) -> list[tuple] | None:
+        """The tag table as ``[(image_id, [(tag, confidence), …]), …]``
+        (derived on first use; the scorers read :attr:`tag_table`)."""
+        if self._tag_rows is None and self.tag_table is not None:
+            self._tag_rows = self.tag_table.rows()
+        return self._tag_rows
 
     # -- build ---------------------------------------------------------
 
@@ -188,8 +308,9 @@ class HotSearchIndex:
         """Collect the serving artifact from an Engine's tables — the
         hot tier's "index build". Each table is projected to its
         serving columns (ids + vectors, or ids + tag structs) and
-        collected as Arrow batches; the matrices are read from the
-        list columns' flat values, with no Python object per element."""
+        collected as Arrow batches; the matrices and the flat tag table
+        are read from the list columns' flat values, with no Python
+        object per vector element."""
         col = engine.image_col
 
         def fetch(df, value):
@@ -205,21 +326,21 @@ class HotSearchIndex:
         seg_ids, seg_mat = vectors(
             engine.segments, "segments", "clip_features"
         )
-        tag_rows = None
+        tags = None
         if engine.segment_tags is not None:
-            ids, tags = fetch(engine.segment_tags, "tags")
-            tags = tags.combine_chunks()
-            pairs = tags.flatten()  # a null tag list holds no pairs
-            tag_rows = _tag_rows(
+            ids, tag_lists = fetch(engine.segment_tags, "tags")
+            tag_lists = tag_lists.combine_chunks()
+            pairs = tag_lists.flatten()  # a null tag list holds no pairs
+            tags = TagTable.from_pairs(
                 _ids(ids),
-                tags.value_lengths().fill_null(0).to_numpy(),
+                tag_lists.value_lengths().fill_null(0).to_numpy(),
                 *(
                     pairs.field(f).to_numpy(zero_copy_only=False)
                     for f in ("tag", "confidence")
                 ),
             )
         return cls(
-            img_ids, img_mat, seg_ids, seg_mat, tag_rows,
+            img_ids, img_mat, seg_ids, seg_mat, tags,
             image_col=engine.image_col,
         )
 
@@ -256,19 +377,15 @@ class HotSearchIndex:
         if self.seg_mat is not None:
             data["seg_image_ids"] = self.seg_image_ids
             data["seg_mat"] = cast(self.seg_mat)
-        if self.tag_rows is not None:
-            pairs = [pair for _, p in self.tag_rows for pair in p]
-            data["tag_row_ids"] = np.asarray([i for i, _ in self.tag_rows])
-            data["tag_row_lens"] = np.asarray(
-                [len(p) for _, p in self.tag_rows], dtype=np.int64
-            )
-            names = [t for t, _ in pairs]
+        t = self.tag_table
+        if t is not None:
+            names = t.names()
+            data["tag_row_ids"] = t.row_ids
+            data["tag_row_lens"] = np.diff(t.offsets)
             data["tag_names"] = (
                 np.asarray(names) if names else np.asarray([], dtype="U1")
             )
-            data["tag_confs"] = np.asarray(
-                [c for _, c in pairs], dtype=np.float64
-            )
+            data["tag_confs"] = t.confs
         with open(path, "wb") as f:
             np.savez(f, **data)
         return path
@@ -280,70 +397,61 @@ class HotSearchIndex:
         per mode in tests/test_serving.py)."""
         with np.load(path, allow_pickle=False) as z:
             a = {k: z[k] for k in z.files}
-        tag_rows = None
+        tags = None
         if "tag_row_lens" in a:
-            tag_rows = _tag_rows(
+            tags = TagTable.from_pairs(
                 a["tag_row_ids"], a["tag_row_lens"], a["tag_names"],
                 a["tag_confs"],
             )
         return cls(
             a.get("image_ids"), a.get("image_mat"), a.get("seg_image_ids"),
-            a.get("seg_mat"), tag_rows,
+            a.get("seg_mat"), tags,
             image_col=str(a.get("image_col", "image_id")),
         )
 
     # -- per-image segment maxima (the W4 argmax kernel) ----------------
 
-    def _segment_maxima(self, cand_mask: np.ndarray, qmat: np.ndarray):
-        """For each image whose mask bit is set: per-query max cosine
-        over the image's segments. Returns (image_ids, maxima matrix
-        n_images × n_queries). Same float64 matmul as the Arrow path
-        (vectors.dot_batch), grouped with reduceat over the image-
-        sorted layout."""
-        rows = np.flatnonzero(cand_mask)
-        if not len(rows):
-            return np.empty(0, dtype=self.seg_groups.dtype), np.zeros(
-                (0, len(qmat))
-            )
-        sims = self.seg_mat[rows] @ qmat.T  # (n_rows, Q)
-        gids = self.seg_image_ids[rows]
-        groups, starts = np.unique(gids, return_index=True)
-        maxima = np.maximum.reduceat(sims, starts, axis=0)
-        return groups, maxima
-
     def _avg_maxima(self, images: np.ndarray, query_rows: Sequence[tuple]):
-        """(image id, avg of the per-query-segment maxima, maxima row)
-        for each of ``images`` that has segments; the avg sums left to
-        right, matching the Catalyst column sum."""
-        qmat = np.asarray(
-            [[float(x) for x in v] for _, v in query_rows],
-            dtype=self.seg_mat.dtype,
-        )
-        gids, maxima = self._segment_maxima(
-            np.isin(self.seg_image_ids, images), qmat
-        )
-        out = []
-        for g, row in zip(gids.tolist(), maxima):
-            total = 0.0 + row[0]
-            for j in range(1, len(qmat)):
-                total = total + row[j]
-            out.append((g, total / float(len(qmat)), row))
-        return out
+        """(image ids, avg of the per-query-segment maxima, maxima
+        matrix n_images × n_queries) for each of ``images`` that has
+        segments, in ascending id order. Same matmul as the Arrow path
+        (vectors.dot_batch) over the candidates' segment rows — a view
+        when they are one contiguous run, else a gather — grouped with
+        reduceat; the avg folds the columns left to right in float64,
+        matching the Catalyst column sum."""
+        qmat = np.asarray([v for _, v in query_rows], dtype=self.seg_mat.dtype)
+        groups = self.seg_groups
+        want = np.unique(images)
+        pos = np.searchsorted(groups, want)
+        pos = pos[groups[np.minimum(pos, len(groups) - 1)] == want]
+        if not len(pos):
+            return groups[:0], np.zeros(0), np.zeros((0, len(qmat)))
+        starts, ends = self.seg_starts[pos], self.seg_ends[pos]
+        if pos[-1] - pos[0] == len(pos) - 1:
+            sims = self.seg_mat[starts[0] : ends[-1]] @ qmat.T
+            cuts = starts - starts[0]
+        else:
+            lens = ends - starts
+            cuts = np.cumsum(lens) - lens
+            rows = np.arange(lens.sum()) + np.repeat(starts - cuts, lens)
+            sims = self.seg_mat[rows] @ qmat.T
+        maxima = np.maximum.reduceat(sims, cuts, axis=0)
+        cols = maxima.astype(np.float64, copy=False)
+        total = 0.0 + cols[:, 0]
+        for j in range(1, cols.shape[1]):
+            total = total + cols[:, j]
+        return groups[pos], total / float(cols.shape[1]), maxima
 
-    # -- the four modes --------------------------------------------------
-
-    def _whole_scores(self, query_vec: Sequence[float], allowed: set | None):
+    def _whole_scores(self, query_vec: Sequence[float], allowed):
         """(ids, calibrated whole scores dot + 1.0) over the images in
         ``allowed``. The query is cast to the MATRIX dtype: a float32
         artifact scores in float32 (mixed-dtype matmul would silently
         materialize a float64 copy of the whole matrix for BLAS)."""
-        q = np.asarray([float(x) for x in query_vec], dtype=self.image_mat.dtype)
+        q = np.asarray(query_vec, dtype=self.image_mat.dtype)
         scores = self.image_mat @ q + 1.0
         ids = self.image_ids
         if allowed is not None:
-            keep = np.asarray(
-                [i in allowed for i in ids.tolist()], dtype=bool
-            )
+            keep = np.isin(ids, _id_array(allowed))
             ids, scores = ids[keep], scores[keep]
         return ids, scores
 
@@ -358,8 +466,8 @@ class HotSearchIndex:
         ids, scores = self._whole_scores(query_vec, allowed)
         take = _topk_order(scores, ids, k)
         return [
-            {self.image_col: ids[i].item(), "score": float(scores[i])}
-            for i in take
+            {self.image_col: i, "score": s}
+            for i, s in zip(ids[take].tolist(), scores[take].tolist())
         ]
 
     def segment(
@@ -377,24 +485,21 @@ class HotSearchIndex:
             return []
         groups = self.seg_groups
         if allowed is not None:
-            keep = np.asarray(
-                [g in allowed for g in groups.tolist()], dtype=bool
-            )
-            groups = groups[keep]
+            groups = groups[np.isin(groups, _id_array(allowed))]
         if candidate_cap is not None:
             groups = groups[: int(candidate_cap)]  # unique() ⇒ sorted asc
-        out = [
-            (g, avg, float(row.max()))
-            for g, avg, row in self._avg_maxima(groups, query_rows)
-        ]
-        out.sort(key=lambda r: (-round_half_up(r[1], 6), r[0]))
+        gids, avg, maxima = self._avg_maxima(groups, query_rows)
+        take = _topk_order(round6(avg), gids, top_k)
         return [
             {
                 self.image_col: g,
-                "avg_similarity": float(a),
+                "avg_similarity": a,
                 "max_segment_similarity": m,
             }
-            for g, a, m in out[: int(top_k)]
+            for g, a, m in zip(
+                gids[take].tolist(), avg[take].tolist(),
+                maxima[take].max(axis=1).tolist(),
+            )
         ]
 
     def hybrid(
@@ -411,31 +516,31 @@ class HotSearchIndex:
         cosine) for pool members only, missing → 0.0, hybrid =
         w·whole + w·segment, (round6(hybrid) DESC, id ASC)."""
         ids, scores = self._whole_scores(query_vec, allowed)
-        pool = max(int(top_k) * 20, 100)
-        take = _topk_order(scores, ids, pool)
+        take = _topk_order(scores, ids, max(int(top_k) * 20, 100))
         pool_ids = ids[take]
-        whole_by_id = dict(zip(pool_ids.tolist(), scores[take].tolist()))
-
-        seg_by_id: dict = {}
+        whole = scores[take].astype(np.float64)
+        seg = np.zeros(len(take))
         if self.seg_mat is not None:
-            seg_by_id = {
-                g: avg for g, avg, _ in self._avg_maxima(pool_ids, query_rows)
-            }
-
-        ww, ws = float(whole_weight), float(segment_weight)
-        out = []
-        for g, w in whole_by_id.items():
-            s = seg_by_id.get(g, 0.0)
-            out.append((g, w, s, ww * w + ws * s))
-        out.sort(key=lambda r: (-round_half_up(r[3], 6), r[0]))
+            gids, avg, _ = self._avg_maxima(pool_ids, query_rows)
+            if len(gids):
+                # join pool members to their segment scores: gids is
+                # sorted, so each member's slot is a binary search
+                pos = np.minimum(np.searchsorted(gids, pool_ids), len(gids) - 1)
+                found = gids[pos] == pool_ids
+                seg[found] = avg[pos[found]]
+        hyb = float(whole_weight) * whole + float(segment_weight) * seg
+        order = _topk_order(round6(hyb), pool_ids, top_k)
         return [
             {
                 self.image_col: g,
-                "whole_score": float(w),
-                "segment_score": float(s),
-                "hybrid_score": float(h),
+                "whole_score": w,
+                "segment_score": s,
+                "hybrid_score": h,
             }
-            for g, w, s, h in out[: int(top_k)]
+            for g, w, s, h in zip(
+                pool_ids[order].tolist(), whole[order].tolist(),
+                seg[order].tolist(), hyb[order].tolist(),
+            )
         ]
 
     def tags(
@@ -447,23 +552,31 @@ class HotSearchIndex:
         """retrieval.tag_search twin: OR-match ≥ confidence floor,
         ranked by (#distinct matched tags DESC, max confidence DESC,
         id ASC)."""
-        tagset = {str(t) for t in tags}
-        floor = float(min_confidence)
-        out = []
-        for image_id, pairs in self.tag_rows:
-            hits = [(t, c) for t, c in pairs if t in tagset and c >= floor]
-            if not hits:
-                continue
-            n_tags = len({t for t, _ in hits})
-            out.append((image_id, n_tags, max(c for _, c in hits)))
-        out.sort(key=lambda r: (-r[1], -r[2], r[0]))
+        t = self.tag_table
+        hit = t.hits(tags, min_confidence)
+        if not hit.any():
+            return []
+        rows, codes = t.pair_rows[hit], t.codes[hit]
+        # pairs are in row order: each matched row is one run of hits
+        cuts = np.flatnonzero(np.diff(rows, prepend=-1))
+        hit_rows = rows[cuts]
+        best = np.maximum.reduceat(t.confs[hit], cuts)
+        distinct = np.unique(rows * len(t.vocab) + codes) // len(t.vocab)
+        n_tags = np.bincount(
+            np.searchsorted(hit_rows, distinct), minlength=len(hit_rows)
+        )
+        ids = t.row_ids[hit_rows]
+        order = np.lexsort((ids, -best, -n_tags))[: int(top_k)]
         return [
             {
                 self.image_col: g,
                 "matched_tags": n,
-                "max_confidence": float(c),
+                "max_confidence": c,
             }
-            for g, n, c in out[: int(top_k)]
+            for g, n, c in zip(
+                ids[order].tolist(), n_tags[order].tolist(),
+                best[order].tolist(),
+            )
         ]
 
     def tag_allowed(
@@ -471,13 +584,9 @@ class HotSearchIndex:
     ) -> set:
         """Engine._tag_allowed_ids twin: ids with ≥1 tag in the filter
         at or above the confidence floor."""
-        tagset = {str(t) for t in tag_filter}
-        floor = float(min_confidence)
-        return {
-            image_id
-            for image_id, pairs in self.tag_rows
-            if any(t in tagset and c >= floor for t, c in pairs)
-        }
+        t = self.tag_table
+        hit = t.hits(tag_filter, min_confidence)
+        return set(t.row_ids[t.pair_rows[hit]].tolist())
 
 
 class ShardedHotIndex:
@@ -537,19 +646,16 @@ class ShardedHotIndex:
                 seg_keep = keep(hot.seg_image_ids)
                 seg_ids = hot.seg_image_ids[seg_keep]
                 seg_mat = hot.seg_mat[seg_keep]
-            tag_rows = None
-            if hot.tag_rows is not None:
-                tag_rows = [
-                    (i, p) for i, p in hot.tag_rows
-                    if int(i) % n_shards == s
-                ]
+            tags = None
+            if hot.tag_table is not None:
+                tags = hot.tag_table.take(keep(hot.tag_table.row_ids))
             shards.append(
                 HotSearchIndex(
                     hot.image_ids[img_keep],
                     hot.image_mat[img_keep],
                     seg_ids,
                     seg_mat,
-                    tag_rows,
+                    tags,
                     image_col=hot.image_col,
                 )
             )
@@ -674,6 +780,6 @@ class ShardedHotIndex:
     def tag_allowed(self, tag_filter, min_confidence) -> set:
         out: set = set()
         for s in self.shards:
-            if s.tag_rows is not None:
+            if s.tag_table is not None:
                 out |= s.tag_allowed(tag_filter, min_confidence)
         return out

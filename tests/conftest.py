@@ -23,3 +23,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session", autouse=True)
+def no_unpersist_errors():
+    """Every cache the suite persisted was released cleanly: a failed
+    ``unpersist`` is counted, not raised, so the count is checked once
+    the whole session has run."""
+    yield
+    from data_feature_extraction_and_retrieval_pipeline_spark import caching
+
+    assert caching.UNPERSIST_ERRORS["count"] == 0, caching.UNPERSIST_ERRORS

@@ -10,6 +10,7 @@ import urllib.error
 import urllib.request
 
 import pytest
+from hypothesis import HealthCheck, assume, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -184,6 +185,49 @@ def test_4xx_paths(server):
         "application/json",
     )
     assert code == 400 and resp["error"] == "Invalid tags format"
+
+
+def test_nonpositive_top_k_and_max_segments_are_400_on_both_tiers(spark):
+    """``top_k < 1`` and ``max_segments < 1`` answer the same 400 from
+    the hot tier and the Spark tier (before: the hot tier served all
+    rows but one for top_k=-1, and max_segments=0 was a 500)."""
+    eng = Engine.from_sf_dir(spark, SF_DIR)
+    eng.segment_tags = spark.createDataFrame(
+        [(0, [("cat", 0.9)])],
+        "image_id long, tags array<struct<tag string, confidence float>>",
+    )
+    image = {"image": ("q.png", b"bad-parameter-query")}
+    requests = [
+        ("/search/whole", *_multipart({"top_k": "-1"}, image)),
+        ("/search/hybrid", *_multipart({"top_k": "0"}, image)),
+        ("/search/segment", *_multipart({"max_segments": "0"}, image)),
+        (
+            "/api/search",
+            *_multipart({"mode": "hybrid", "max_segments": "-3"}, image),
+        ),
+        (
+            "/search/tags",
+            json.dumps({"tags": ["cat"], "top_k": 0}).encode(),
+            "application/json",
+        ),
+    ]
+    answers = {}
+    for hot in (True, False):
+        srv = serve(eng, model_loader=lambda: None, hot=hot)
+        base = "http://{}:{}".format(*srv.server_address)
+        try:
+            answers[hot] = [_post(base, p, b, c) for p, b, c in requests]
+        finally:
+            srv.shutdown()
+    assert answers[True] == answers[False]
+    assert [a[0] for a in answers[True]] == [400] * len(requests)
+    assert [a[1]["error"] for a in answers[True]] == [
+        "top_k must be >= 1, got -1",
+        "top_k must be >= 1, got 0",
+        "max_segments must be >= 1, got 0",
+        "max_segments must be >= 1, got -3",
+        "top_k must be >= 1, got 0",
+    ]
 
 
 def test_413_upload_cap(server):
@@ -716,3 +760,209 @@ def test_hot_refresh_follows_ingest_without_manual_rebuild(spark):
         assert still["results"][0]["image_id"] != 424242
     finally:
         srv2.shutdown()
+
+
+# -- multipart parsing: the byte-level parser vs the stdlib email parser ------
+
+
+def _email_parse_multipart(body: bytes, content_type: str):
+    """The reference: the stdlib ``email`` feedparser over the whole
+    body (the service's parser before it split bodies with bytes
+    operations), reduced to the same (form, files) result."""
+    from email.parser import BytesParser
+    from email.policy import default
+
+    head = f"Content-Type: {content_type}\r\nMIME-Version: 1.0\r\n\r\n"
+    msg = BytesParser(policy=default).parsebytes(head.encode("utf-8") + body)
+    form: dict = {}
+    files: dict = {}
+    if not msg.is_multipart():
+        return form, files
+    for part in msg.iter_parts():
+        name = part.get_param("name", header="content-disposition")
+        if name is None:
+            continue
+        payload = part.get_payload(decode=True) or b""
+        filename = part.get_filename()
+        if filename is not None:
+            files[name] = (filename, payload)
+        else:
+            form[name] = payload.decode("utf-8", errors="replace")
+    return form, files
+
+
+def _bytes_with_breaks():
+    return st.lists(
+        st.one_of(
+            st.binary(max_size=24),
+            st.sampled_from(
+                [b"\r\n", b"\r", b"\n", b"--", b"\r\n--", b"-", b" \t"]
+            ),
+        ),
+        max_size=10,
+    ).map(b"".join)
+
+
+def _multipart_bodies():
+    """(body, content type, parts' raw payloads) with binary payloads
+    holding CRLF and ``--``, quoted, unquoted and RFC 2231 filenames,
+    base64 parts, preamble, epilogue, and bodies that never close."""
+    import base64
+    import string
+    import urllib.parse
+
+    fname_text = st.text(
+        alphabet=string.ascii_letters + string.digits + " ._-();,=éü字",
+        min_size=1, max_size=12,
+    )
+
+    @st.composite
+    def filename_param(draw):
+        fname = draw(fname_text) + draw(st.sampled_from([".jpg", ".png", ""]))
+        style = draw(st.sampled_from(["quoted", "escaped", "token", "2231"]))
+        if style == "quoted":
+            return f'filename="{fname}"'
+        if style == "escaped":
+            return 'filename="{}"'.format(
+                ('a"' + fname + "\\").replace("\\", "\\\\").replace('"', '\\"')
+            )
+        if style == "token":
+            return "filename=" + "".join(
+                c for c in fname if c.isalnum() or c in "._-"
+            ) + "x"
+        quoted = urllib.parse.quote(fname.encode("utf-8"))
+        if draw(st.booleans()):
+            return f"filename*=utf-8''{quoted}"
+        cut = draw(st.integers(0, len(quoted)))
+        while quoted[max(cut - 2, 0):cut].count("%"):
+            cut -= 1  # never split a %XX escape across segments
+        return (
+            f"filename*0*=utf-8''{quoted[:cut]}; filename*1*={quoted[cut:]}"
+        )
+
+    @st.composite
+    def part(draw):
+        name = draw(st.sampled_from(["image", "top_k", "tags", "mode", "x"]))
+        cd = f'Content-Disposition: form-data; name="{name}"'
+        if draw(st.booleans()):  # a form field
+            value = draw(st.text(max_size=20)).encode("utf-8")
+            value += draw(_bytes_with_breaks())
+            return f"{cd}\r\n\r\n".encode() + value, value
+        payload = draw(_bytes_with_breaks())
+        headers = [f"{cd}; {draw(filename_param())}"]
+        headers.append(
+            draw(st.sampled_from(
+                ["", "Content-Type: image/jpeg",
+                 "Content-Type: application/octet-stream"]
+            ))
+        )
+        body = payload
+        if draw(st.booleans()):
+            headers.append("Content-Transfer-Encoding: base64")
+            body = base64.encodebytes(payload)
+        head = "\r\n".join(h for h in headers if h)
+        return f"{head}\r\n\r\n".encode("utf-8") + body, payload
+
+    @st.composite
+    def bodies(draw):
+        # RFC 2045 token characters only: the stdlib header parser
+        # reads an unquoted ' as RFC 2231 syntax and loses the boundary
+        boundary = "hb" + draw(
+            st.text(alphabet=string.ascii_letters + string.digits + "_-.+",
+                    min_size=4, max_size=24)
+        )
+        parts = draw(st.lists(part(), max_size=5))
+        chunks = [draw(_bytes_with_breaks()) + b"\r\n"]  # preamble
+        chunks += [
+            b"--" + boundary.encode() + b"\r\n" + raw + b"\r\n"
+            for raw, _ in parts
+        ]
+        if draw(st.booleans()):
+            chunks.append(b"--" + boundary.encode() + b"--")
+            chunks.append(draw(_bytes_with_breaks()))  # epilogue
+        ctype = draw(st.sampled_from([
+            "multipart/form-data; boundary={}",
+            'multipart/form-data; boundary="{}"',
+            "multipart/form-data; charset=utf-8; boundary={}",
+        ])).format(boundary)
+        return b"".join(chunks), ctype, boundary
+
+    return bodies()
+
+
+def _check_same_parse(body: bytes, ctype: str) -> None:
+    from data_feature_extraction_and_retrieval_pipeline_spark.service import (
+        _parse_multipart,
+    )
+
+    assert _parse_multipart(body, ctype) == _email_parse_multipart(body, ctype)
+
+
+@given(_multipart_bodies())
+@settings(
+    max_examples=400, deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+def test_multipart_parser_matches_email_parser_generated(case):
+    body, ctype, boundary = case
+    # a real client picks a boundary its payloads do not contain
+    assume(body.count(b"--" + boundary.encode()) == body.count(
+        b"\n--" + boundary.encode()
+    ))
+    _check_same_parse(body, ctype)
+
+
+@pytest.mark.parametrize(
+    "body, ctype",
+    [
+        # no closing delimiter: the last part runs to the end
+        (
+            b'--b1\r\nContent-Disposition: form-data; name="top_k"\r\n\r\n7'
+            b'\r\n--b1\r\nContent-Disposition: form-data; name="image"; '
+            b'filename="q.png"\r\n\r\nA\r\n--B\r\n',
+            "multipart/form-data; boundary=b1",
+        ),
+        # no delimiter at all, and a JSON body sent as multipart
+        (b"plain text, no parts", "multipart/form-data; boundary=b1"),
+        (b'{"tags": ["cat"]}', "multipart/form-data; boundary=zzz"),
+        # not multipart / no boundary: an empty form
+        (b"--b1\r\n\r\n--b1--", "application/json"),
+        (b"--b1\r\n\r\n--b1--", "multipart/form-data"),
+        # bare-LF and bare-CR line breaks, folded header, doubled
+        # delimiter, a close delimiter before any part
+        (
+            b'--b1\n--b1\nContent-Disposition: form-data;\r\n name="a"\n\n'
+            b"v\r\r\n--b1 \t\r\nContent-Disposition: form-data; name=b\r\r"
+            b"w\r--b1--",
+            "multipart/form-data; boundary=b1",
+        ),
+        (b"--b1--\r\n--b1\r\n\r\n", "multipart/form-data; boundary=b1"),
+        # a part with no blank line, a header-less part, a body line
+        # inside the header block, a Content-Type name= filename
+        (
+            b'--b1\r\nContent-Disposition: form-data; name="h"\r\n--b1\r\n'
+            b"no headers\r\n--b1\r\nContent-Disposition: form-data; "
+            b'name="z"\r\nnot a header\r\nmore\r\n--b1\r\n'
+            b'Content-Type: image/png; name="n.png"\r\n'
+            b"Content-Disposition: form-data; name=img\r\n\r\nQ\r\n--b1--",
+            "multipart/form-data; boundary=b1",
+        ),
+        # quoted-printable, raw UTF-8 and encoded-word filenames
+        (
+            b'--b1\r\nContent-Disposition: form-data; name="q"\r\n'
+            b"Content-Transfer-Encoding: quoted-printable\r\n\r\na=3Db=\r\nc"
+            b'\r\n--b1\r\nContent-Disposition: form-data; name="u"; '
+            b'filename="caf\xc3\xa9 \xff.jpg"\r\n\r\nX\r\n--b1\r\n'
+            b'Content-Disposition: form-data; name="e"; '
+            b'filename="=?utf-8?q?caf=C3=A9.jpg?="\r\n\r\nY\r\n--b1--',
+            "multipart/form-data; boundary=b1",
+        ),
+    ],
+    ids=[
+        "no-close", "no-delimiter", "json-body", "not-multipart",
+        "no-boundary", "line-breaks", "close-first", "odd-parts",
+        "encodings",
+    ],
+)
+def test_multipart_parser_matches_email_parser(body, ctype):
+    _check_same_parse(body, ctype)

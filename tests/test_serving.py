@@ -268,6 +268,139 @@ def test_round_half_up_matches_spark_round(spark):
     assert got == [round_half_up(v, 6) for v in vals]
 
 
+def test_round6_matches_round_half_up():
+    """The vectorized rank-key rounding equals the scalar Decimal
+    HALF_UP on exact decimal ties (x.xxxxxx5), their ±1-ulp
+    neighbours, negatives, and values across [-1, 2] — sign of zero
+    included."""
+    import random
+
+    import numpy as np
+
+    from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
+        round6,
+    )
+
+    rng = random.Random(0x5EED)
+    ties = [
+        float(f"{rng.choice('-+')}{rng.randint(0, 2)}.{rng.randint(0, 10**6 - 1):06d}5")
+        for _ in range(3000)
+    ] + [0.1234565, -0.1234565, 1.9999995, 2.0000005, 5e-7, -5e-7]
+    ties = np.asarray(ties)
+    vals = np.concatenate([
+        ties,
+        np.nextafter(ties, np.inf),
+        np.nextafter(ties, -np.inf),
+        [rng.uniform(-1.0, 2.0) for _ in range(5000)],
+        [rng.uniform(-1, 1) * 10.0 ** rng.randint(-9, 3) for _ in range(2000)],
+        [0.0, -0.0, 1e-7, -1e-7, 4e-7, -4e-7, 1.5e-6, 123.4567894999, 67.1, 1e9],
+    ])
+    got = round6(vals)
+    want = np.asarray([round_half_up(v, 6) for v in vals.tolist()])
+    assert np.array_equal(got, want)
+    assert np.array_equal(np.signbit(got), np.signbit(want))
+
+
+def test_hash_projection_reseeded_rng_matches_fresh_rng():
+    """The stub encoder re-seeds one RandomState per thread; its
+    vectors equal a fresh ``RandomState(seed)``'s, whatever the thread
+    drew before (interleaved payloads, odd dims, four threads)."""
+    import hashlib
+    from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
+
+    from data_feature_extraction_and_retrieval_pipeline_spark.ml.encoders import (
+        _hash_projection,
+    )
+
+    def fresh(payload: bytes, dim: int) -> np.ndarray:
+        seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big")
+        v = np.random.RandomState(seed % 2**32).standard_normal(dim)
+        v = v.astype(np.float32)
+        return v / np.linalg.norm(v)
+
+    cases = [(b"payload-%d" % i, (7, 64, 511, 512)[i % 4]) for i in range(200)]
+
+    def run(offset: int) -> bool:
+        return all(
+            np.array_equal(_hash_projection(p, d), fresh(p, d))
+            for p, d in cases[offset:] + cases[:offset]
+        )
+
+    with ThreadPoolExecutor(max_workers=4) as ex:
+        assert all(ex.map(run, (0, 50, 100, 150)))
+
+
+def _tags_reference(tag_rows, tags, floor, top_k, col="image_id"):
+    """The per-row tag scorer: every row's matching pairs, distinct tag
+    count, max confidence; (count DESC, confidence DESC, id ASC)."""
+    tagset = {str(t) for t in tags}
+    out = []
+    for image_id, pairs in tag_rows:
+        hits = [(t, c) for t, c in pairs if t in tagset and c >= floor]
+        if hits:
+            out.append(
+                (image_id, len({t for t, _ in hits}), max(c for _, c in hits))
+            )
+    out.sort(key=lambda r: (-r[1], -r[2], r[0]))
+    return [
+        {col: g, "matched_tags": n, "max_confidence": float(c)}
+        for g, n, c in out[:top_k]
+    ]
+
+
+def test_flat_tag_table_matches_per_row_reference(spark):
+    """``tags`` / ``tag_allowed`` over the flat CSR table equal the
+    per-row scorer on rows with duplicate tags, empty and null tag
+    lists, null tag names and an image id on two rows."""
+    import random
+
+    from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
+        HotSearchIndex,
+    )
+
+    rnd = random.Random(11)
+    vocab = ["cat", "dog", "fish", "bird", "car"]
+    rows = [
+        (0, [("cat", 0.9), ("cat", 0.3), ("dog", 0.2)]),
+        (1, []),
+        (2, None),
+        (3, [(None, 0.8), ("dog", 0.5)]),
+        (4, [("fish", 0.5), ("fish", 0.5)]),
+        (0, [("bird", 0.7)]),
+    ] + [
+        (
+            i,
+            [
+                (rnd.choice(vocab), rnd.choice([0.1, 0.25, 0.5, rnd.random()]))
+                for _ in range(rnd.randint(0, 6))
+            ],
+        )
+        for i in range(5, 80)
+    ]
+    eng = Engine(
+        None,
+        segment_tags=spark.createDataFrame(
+            rows,
+            "image_id long, tags array<struct<tag string, confidence double>>",
+        ),
+    )
+    hot = HotSearchIndex.from_engine(eng)
+    per_row = [(i, p or []) for i, p in rows]
+    assert hot.tag_rows == per_row
+    for tags in (["cat"], ["dog", "fish"], vocab, ["zebra"], ["cat", "zebra"]):
+        for floor in (0.0, 0.1, 0.25, 0.5, 0.95):
+            for top_k in (1, 5, 100):
+                assert hot.tags(tags, floor, top_k) == _tags_reference(
+                    per_row, tags, floor, top_k
+                ), (tags, floor, top_k)
+            assert hot.tag_allowed(tags, floor) == {
+                i for i, p in per_row
+                if any(t in set(tags) and c >= floor for t, c in p)
+            }, (tags, floor)
+
+
 # -- percolator hot scorer -------------------------------------------------
 
 
@@ -462,7 +595,7 @@ def test_load_boots_without_pyspark(engine, tmp_path):
         "print(json.dumps(idx.whole(q, 5)))\n"
     )
     out = subprocess.run(
-        [sys.executable, "-c", code, path, _json.dumps(qvec)],
+        [sys.executable, "-c", code, path, _json.dumps(qvec.tolist())],
         capture_output=True, text=True, timeout=120,
         env={"PYTHONPATH": f"{mask}:{pkg_root}", "PATH": "/usr/bin:/bin"},
     )

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -212,9 +213,9 @@ def main() -> int:
     trailing_oracle = []   # oracle_total of prior rounds
     prev_queries = None    # per-query walls of the most recent round
     # per-query oracle walls of prior CLEAN artifacts: the over-2x bin
-    # pins each query's denominator to the median of (trailing clean
-    # values + this run), so bin membership stops churning with one
-    # run's DuckDB contention (VERDICT r13 'What's wrong #3')
+    # pins each query's denominator to their median (this run's value
+    # only when there are none), so bin membership stops churning with
+    # one run's DuckDB contention (VERDICT r13 'What's wrong #3')
     trailing_oracle_q: dict[str, list[float]] = {}
     self_artifact = f"BENCH_x10_r{rnd:02d}.json"
     for p in sorted(REPO.glob("BENCH_x10_r*.json")):
@@ -318,14 +319,15 @@ def main() -> int:
     # their own bin — their Spark side does physical I/O the oracle
     # doesn't, so the ratio prices the write, not the plan
     # Denominator-robust bin membership: each query's oracle seconds
-    # pinned to the median of (trailing clean artifacts + this run) so
-    # one contended DuckDB pass can't churn the list (r14 hygiene;
-    # `ratio`/`floor_adj_ratio` below stay on this run's denominator —
-    # the pinned value only decides the bins).
-    oracle_pinned = {}
-    for n, o in oracle_timings.items():
-        vals = sorted(trailing_oracle_q.get(n, []) + [o])
-        oracle_pinned[n] = vals[len(vals) // 2]
+    # pinned to the median of the trailing clean artifacts, falling
+    # back to this run's value when none has the query, so one
+    # contended DuckDB pass (this one included) can't churn the list
+    # (r14 hygiene; `ratio`/`floor_adj_ratio` below stay on this run's
+    # denominator — the pinned value only decides the bins).
+    oracle_pinned = {
+        n: statistics.median(trailing_oracle_q.get(n) or [o])
+        for n, o in oracle_timings.items()
+    }
     measurable = {n for n, o in oracle_pinned.items() if o >= 0.1}
     over = {
         n for n in measurable
